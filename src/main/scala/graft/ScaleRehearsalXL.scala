@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The 100×-class rehearsal main (local iteration; not part of the
@@ -29,13 +29,9 @@ object ScaleRehearsalXL {
     val inner = 14
     require(copies % inner == 0, s"copies must be a multiple of $inner")
     val outer = copies / inner
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.Session.defaultCpus
+    val spark = graft.core.Session.local(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", (2 * cpus).toString)
     spark.sparkContext.setLogLevel("WARN")
     graft.model.DerivedState.register(spark, sfDir)
     val now = graft.model.DerivedState.NowMs

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timer (local iteration only; not part of the driver
   * contract): runs each named `SparkEntry.queries` entry `reps` times at
-  * the given sf dir under the Bench session settings and prints every
-  * reading plus the min — the number BASELINE.md's familiarization
-  * sections record for new gate entries.
+  * the given sf dir in a `core.Session.local()` session (local[cores],
+  * cores = SPARK_GRAFT_CPUS or nproc) and prints every reading plus the
+  * min — the number BASELINE.md's familiarization sections record for
+  * new gate entries.
   * Usage: runMain graft.TimeQueries [sfDir] [query ...]
   */
 object TimeQueries {
@@ -14,13 +13,7 @@ object TimeQueries {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "pass at least one query name")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val reps = sys.env.get("SPARK_GRAFT_TIME_REPS").map(_.toInt).getOrElse(2)
     // one warm action so JIT/codegen/session init doesn't bill query 1

@@ -193,9 +193,11 @@ object Balancer {
     def intervals(ns: Seq[(Long, String, Long)])
         : Map[String, IndexedSeq[(Long, Long, Long)]] = {
       // (id, start, end) per rack key ("" = global), ids ascending —
-      // Window.partitionBy(location).orderBy(id) / Window.orderBy(id)
+      // Window.partitionBy(location).orderBy(id) / Window.orderBy(id).
+      // A NULL-location node never pairs within a rack (the dataflow's
+      // sRack === tRack is never true on NULL), so same-rack passes skip it
       val grouped =
-        if (sameRack) ns.filter(_._3 > 0).groupBy(_._2)
+        if (sameRack) ns.filter(n => n._3 > 0 && n._2 != null).groupBy(_._2)
         else Map("" -> ns.filter(_._3 > 0))
       grouped.map { case (k, g) =>
         var cum = 0L

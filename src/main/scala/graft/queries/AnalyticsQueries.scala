@@ -32,19 +32,33 @@ object AnalyticsQueries {
     * pushdown does the pruning — at cluster scale a namespace-sized pin
     * is a storage liability, not a win.
     *
-    * Returns (block, reported, blockViewName, reportedViewName); the view
-    * names let SQL scripts (BlockReceivedOpsSql) re-point too. */
-  private def pinnedBlockReported(s: SparkSession)
-      : (DataFrame, DataFrame, String, String) =
+    * Hands (block, reported, blockViewName, reportedViewName) to `use`;
+    * the view names let SQL scripts (BlockReceivedOpsSql) re-point too.
+    * The pin views get per-call names and are dropped when `use`
+    * returns or throws, so `use` must analyze every SQL text that names
+    * them before it returns (`SparkSession.sql` analyzes eagerly). No
+    * evaluation can then resolve against another's pin, and the catalog
+    * keeps no old pin reachable. */
+  private[graft] def pinnedBlockReported[T](s: SparkSession)(
+      use: (DataFrame, DataFrame, String, String) => T): T =
     if (s.conf.getOption("graft.layout").contains("bucketed"))
-      (s.table("block"), s.table("reported"), "block", "reported")
+      use(s.table("block"), s.table("reported"), "block", "reported")
     else {
-      val pin = graft.store.StateStore.live(s.table("block")).localCheckpoint()
-      pin.createOrReplaceTempView("graft_block_pin")
-      val rep = s.sql(DerivedState.reportedSqlFrom("graft_block_pin"))
-      rep.createOrReplaceTempView("graft_reported_pin")
-      (pin, rep, "graft_block_pin", "graft_reported_pin")
+      val n = pinSeq.incrementAndGet()
+      val (blockView, reportedView) = (s"graft_block_pin_$n", s"graft_reported_pin_$n")
+      try {
+        val pin = graft.store.StateStore.live(s.table("block")).localCheckpoint()
+        pin.createOrReplaceTempView(blockView)
+        val rep = s.sql(DerivedState.reportedSqlFrom(blockView))
+        rep.createOrReplaceTempView(reportedView)
+        use(pin, rep, blockView, reportedView)
+      } finally {
+        s.catalog.dropTempView(blockView)
+        s.catalog.dropTempView(reportedView)
+      }
     }
+
+  private val pinSeq = new java.util.concurrent.atomic.AtomicLong()
 
   def queries: Map[String, Q] = Map(
     // N1: getBlockLocations — cumulative range selection + replica attach
@@ -367,15 +381,15 @@ object AnalyticsQueries {
       // exactly once (the markDim broadcast), so with the inputs pinned a
       // checkpoint would only add an action — profiled ~2-3 s of pure
       // scheduling/write overhead
-      val (blockDf, reportedDf, blockView, reportedView) =
-        pinnedBlockReported(s)
-      val marks = Replication.corruptMarks(
-        Dataflows.reconcileReports(blockDf, reportedDf))
-      Replication.blockReceived(blockDf, s.table("file"),
-          s.table("datanode"),
-          s.sql(blockReceivedOpsSqlFrom(reportedView, blockView)),
-          corrupt = Some(marks))
-        .orderBy(col("blockId"), col("datanodeId"))
+      pinnedBlockReported(s) { (blockDf, reportedDf, blockView, reportedView) =>
+        val marks = Replication.corruptMarks(
+          Dataflows.reconcileReports(blockDf, reportedDf))
+        Replication.blockReceived(blockDf, s.table("file"),
+            s.table("datanode"),
+            s.sql(blockReceivedOpsSqlFrom(reportedView, blockView)),
+            corrupt = Some(marks))
+          .orderBy(col("blockId"), col("datanodeId"))
+      }
     },
     // invalidateCorruptReplicas sweep: once a block has enough GOOD live
     // replicas, its corrupt marks convert to invalidation work and leave
@@ -389,13 +403,14 @@ object AnalyticsQueries {
       // pinnedBlockReported: the marks checkpoint, the marked-row prune
       // checkpoint and the final join each re-derived the block view —
       // the pin collapses those derivations to one
-      val (blockDf, reportedDf, _, _) = pinnedBlockReported(s)
-      val marks = Replication.corruptMarks(
-        Dataflows.reconcileReports(blockDf, reportedDf))
-        .localCheckpoint()
-      Replication.corruptInvalidations(marks, blockDf,
-          s.table("file"), s.table("datanode"), Now)
-        .orderBy(col("blockId"), col("datanodeId"))
+      pinnedBlockReported(s) { (blockDf, reportedDf, _, _) =>
+        val marks = Replication.corruptMarks(
+          Dataflows.reconcileReports(blockDf, reportedDf))
+          .localCheckpoint()
+        Replication.corruptInvalidations(marks, blockDf,
+            s.table("file"), s.table("datanode"), Now)
+          .orderBy(col("blockId"), col("datanodeId"))
+      }
     },
     // N1 consulting the standing CorruptReplicasMap: corrupt replicas
     // (marked from the N5 sweep's stored-replica toInvalidate decisions)

@@ -100,14 +100,24 @@ class BalancerSpec extends SparkSpec {
     // pairs() runs the driver-side packing below PairsDriverLimit; the
     // over-cap fallback keeps the original window dataflow. Same
     // classification in, same (pass, source, target, bytes) multiset out.
-    val fast = rows(Balancer.pairs(datanode, now, t)
-      .orderBy(col("pass"), col("sourceId"), col("targetId")))
-    val slow = rows(Balancer.pairsDataflow(
-        Balancer.classify(datanode, now, t)
-          .select(col("id"), col("location"), col("nodeClass"),
-            col("maxSizeToMove")))
-      .orderBy(col("pass"), col("sourceId"), col("targetId")))
-    assert(fast == slow)
+    // The second input adds NULL-location over/under/belowAvg nodes: the
+    // dataflow's sRack === tRack never pairs them within a rack, so the
+    // driver's same-rack passes must skip them too (and must not sort a
+    // NULL rack key beside real ones); the global passes still pair them.
+    val nullRacks = datanode.unionByName(Seq(
+        dn(10L, 5000L, null), dn(11L, 1000L, null), dn(12L, 2200L, null))
+      .toDF("id", "capacity", "dfsUsed", "remaining", "lastUpdated",
+        "location", "adminState", "version"))
+    for (d <- Seq(datanode, nullRacks)) {
+      val fast = rows(Balancer.pairs(d, now, t)
+        .orderBy(col("pass"), col("sourceId"), col("targetId")))
+      val slow = rows(Balancer.pairsDataflow(
+          Balancer.classify(d, now, t)
+            .select(col("id"), col("location"), col("nodeClass"),
+              col("maxSizeToMove")))
+        .orderBy(col("pass"), col("sourceId"), col("targetId")))
+      assert(fast == slow)
+    }
   }
 
   test("movePlan: claim-once, target-exclusion, rack rule, byte budget") {

@@ -347,4 +347,24 @@ class ReplicationSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 1L)))
   }
+
+  test("n_block_received: per-call pin views match the views path and leave no pin view") {
+    val sf = "/root/testdata/sf0.001"
+    graft.model.DerivedState.register(spark, sf)
+    val viewsPath = Replication.blockReceived(spark.table("block"),
+        spark.table("file"), spark.table("datanode"),
+        spark.sql(graft.queries.AnalyticsQueries.BlockReceivedOpsSql),
+        corrupt = Some(Replication.corruptMarks(Dataflows.reconcileReports(
+          spark.table("block"), spark.table("reported")))))
+      .orderBy(col("blockId"), col("datanodeId"))
+    val expected = rows(viewsPath)
+    assert(expected.nonEmpty)
+    val q = graft.queries.AnalyticsQueries.queries("n_block_received")
+    // two evaluations in one session: each resolves against its own pin
+    val runs = Seq(q(spark, sf), q(spark, sf))
+    runs.foreach(df => assert(rows(df) == expected))
+    val pinViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("graft_") && n.contains("pin"))
+    assert(pinViews.isEmpty, s"pin views left in the catalog: ${pinViews.mkString(", ")}")
+  }
 }
