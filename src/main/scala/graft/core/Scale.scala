@@ -261,13 +261,13 @@ object Scale {
   }
 
   /** Read the maintained stats triple (latest committed version). */
-  def readStatsStore(spark: SparkSession, dir: String)
+  def readStatsStore(spark: SparkSession, storeDir: String)
       : graft.functions.TextFunctions.Bm25Stats = {
-    val v = f"v=${latestStatsVersion(dir)}%06d"
+    val v = f"v=${latestStatsVersion(storeDir)}%06d"
     graft.functions.TextFunctions.Bm25Stats(
-      spark.read.parquet(s"$dir/doc_len"),
-      spark.read.parquet(s"$dir/$v/term_df"),
-      spark.read.parquet(s"$dir/$v/corpus"))
+      spark.read.parquet(s"$storeDir/doc_len"),
+      spark.read.parquet(s"$storeDir/$v/term_df"),
+      spark.read.parquet(s"$storeDir/$v/corpus"))
   }
 
   /** Fold a posting-store DELTA ([[graft.functions.TextFunctions.

@@ -188,23 +188,44 @@ object DerivedState {
     sql.replaceAll("(?m)^([a-zA-Z_][a-zA-Z0-9_]*) AS \\(",
       "$1 AS MATERIALIZED (")
 
-  /** events.ts normalized to BIGINT epoch-nanos whatever the parquet
-    * encoding: TIMESTAMP(NANOS) testdata arrives as BIGINT via the
-    * nanosAsLong legacy conf and passes through; TIMESTAMP(MICROS)
-    * (driver generators vary by round) arrives as a timestamp column and
-    * is converted (UTC session) — the DuckDB oracle side's epoch_ns(ts)
-    * yields the same nanos either way. */
-  def normalizeEventTs(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType) df
-    else df.withColumn("ts",
-      unix_micros(col("ts").cast("timestamp")) * lit(1000L))
+  /** events.ts as BIGINT epoch-nanos: the declared TIMESTAMP_NTZ
+    * column (`Tables.schemas`) converted in the UTC session — the DuckDB
+    * oracle side's epoch_ns(ts) yields the same nanos. */
+  def normalizeEventTs(df: DataFrame): DataFrame =
+    df.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
 
-  /** Register base parquet views + derived temp views in the session.
+  /** Every view [[register]] can create: the raw tables, then the
+    * derived views in dependency order. */
+  private val AllViews: Seq[String] = graft.core.Tables.names ++ derived.map(_._1)
+
+  /** The views each derived view reads; datanode and lease read none. */
+  private val reads: Map[String, Seq[String]] = Map(
+    "file" -> Seq("nation", "customer", "orders"),
+    "block" -> Seq("lineitem"),
+    "reported" -> Seq("block"),
+    "ops" -> Seq("events"),
+    "datanode" -> Nil,
+    "lease" -> Nil)
+
+  /** `views` plus everything they read, transitively, in [[AllViews]]
+    * order (raw tables before the derived views that read them). */
+  private def closure(views: Seq[String]): Seq[String] = {
+    def expand(v: String): Set[String] =
+      reads.getOrElse(v, Nil).toSet.flatMap(expand) + v
+    val wanted = views.toSet.flatMap(expand)
+    val unknown = wanted -- AllViews
+    require(unknown.isEmpty, s"no such state view: ${unknown.mkString(", ")}")
+    AllViews.filter(wanted)
+  }
+
+  /** Register base parquet views + derived temp views in the session:
+    * all of them by default, else `views` and their [[closure]].
     * events.ts is ALWAYS BIGINT nanos here (normalizeEventTs). */
-  def register(spark: SparkSession, sfDir: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.core.Tables.names.foreach { t =>
-      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
+  def register(spark: SparkSession, sfDir: String,
+      views: Seq[String] = AllViews): Unit = {
+    val registered = closure(views)
+    graft.core.Tables.names.filter(registered.contains).foreach { t =>
+      val raw = graft.core.Tables.read(spark, sfDir, t)
       val df = if (t == "events") normalizeEventTs(raw) else raw
       df.createOrReplaceTempView(t)
     }
@@ -212,7 +233,7 @@ object DerivedState {
     // to push each query's filters/projections into the parquet scans —
     // measured faster than caching even when a query reads a table 2-4×.
     derived.foreach { case (n, q) =>
-      spark.sql(q).createOrReplaceTempView(n)
+      if (registered.contains(n)) spark.sql(q).createOrReplaceTempView(n)
     }
     // layout mode (Bench's SPARK_GRAFT_BENCH_LAYOUT=bucketed): shadow
     // the three persisted-state views with the bucketed catalog tables
@@ -228,7 +249,10 @@ object DerivedState {
     // bucketed layout (Scale.writeRelationalTables) must serve the SQL
     // view path (q25's GROUPING SETS) exactly like Tables.load serves
     // the DataFrame path.
-    if (spark.conf.getOption("graft.layout").contains("bucketed")) {
+    val shadowed = Seq("file", "block", "datanode", "events", "lineitem", "orders")
+      .filter(registered.contains)
+    if (shadowed.nonEmpty &&
+        spark.conf.getOption("graft.layout").contains("bucketed")) {
       // provenance guard (ADVICE r17): the shadow swaps SQL views for
       // catalog tables materialized from SOME sfDir — without this
       // check a same-session register() with a DIFFERENT sfDir would
@@ -242,18 +266,23 @@ object DerivedState {
           s"written from ${written.getOrElse("<unrecorded>")}, not the " +
           s"requested $sfDir — set ${graft.core.Tables.LayoutDirKey} when " +
           s"activating the layout, or register via views")
-      Seq("file", "block", "datanode", "events", "lineitem", "orders")
-        .foreach { t =>
-          val tbl = s"graft_state_$t"
-          if (spark.catalog.tableExists(tbl))
-            spark.table(tbl).createOrReplaceTempView(t)
-        }
+      shadowed.foreach { t =>
+        val tbl = s"graft_state_$t"
+        if (spark.catalog.tableExists(tbl))
+          spark.table(tbl).createOrReplaceTempView(t)
+      }
     }
   }
 
-  def file(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("file") }
-  def block(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("block") }
-  def datanode(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("datanode") }
-  def lease(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("lease") }
-  def ops(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("ops") }
+  /** Each accessor registers only its own view's [[closure]]. */
+  private def view(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    register(spark, sfDir, Seq(name))
+    spark.table(name)
+  }
+
+  def file(spark: SparkSession, sfDir: String): DataFrame = view(spark, sfDir, "file")
+  def block(spark: SparkSession, sfDir: String): DataFrame = view(spark, sfDir, "block")
+  def datanode(spark: SparkSession, sfDir: String): DataFrame = view(spark, sfDir, "datanode")
+  def lease(spark: SparkSession, sfDir: String): DataFrame = view(spark, sfDir, "lease")
+  def ops(spark: SparkSession, sfDir: String): DataFrame = view(spark, sfDir, "ops")
 }

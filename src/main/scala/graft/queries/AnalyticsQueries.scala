@@ -177,8 +177,8 @@ object AnalyticsQueries {
     },
     // N8: excess-replica invalidation work
     "n8_excess_replicas" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      Dataflows.excessReplicas(s.table("block"), s.table("file"), s.table("datanode"))
+      Dataflows.excessReplicas(DerivedState.block(s, dir), DerivedState.file(s, dir),
+          DerivedState.datanode(s, dir))
         .filter(col("id") % 20 === 0L)
         .select(col("id"), col("datanodeId"), col("remaining"), col("dropRank"))
         .orderBy(col("id"), col("dropRank"))

@@ -1301,8 +1301,6 @@ object DataOpsQueries {
     // parquet → stateful agg → AvailableNow trigger → memory sink. The
     // oracle is identical to e2's: stream/batch parity is the check.
     "e4_stream_window_parity" -> { (s, dir) =>
-      DerivedState.register(s, dir) // sets the nanosAsLong conf for events
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
       val sinkName = "e4sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
@@ -1313,7 +1311,8 @@ object DataOpsQueries {
         srcDir.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet"))
       val stream = DerivedState.normalizeEventTs(
-          s.readStream.schema(schema).parquet(srcDir.toString))
+          s.readStream.schema(graft.core.Tables.schemas("events"))
+            .parquet(srcDir.toString))
         .withColumn("day", expr("ts div 86400000000000"))
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),

@@ -107,8 +107,7 @@ object MutationQueries {
     },
     // N13: setReplication on big files (P8 SET + version bump), write-set
     "n13_set_replication" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      val out = Mutations.setAttrs(s.table("file"),
+      val out = Mutations.setAttrs(DerivedState.file(s, dir),
         col("length") > 400000L && col("version") > 0,
         Map("replication" -> StateStore.Assign(3L)), nowMs = Now)
       out.filter(col("length") > 400000L && col("version") > 0)

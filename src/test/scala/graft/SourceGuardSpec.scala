@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level guards over `src/main/scala`: sessions are built in one
-  * place, no main pins a core count, and library packages read no
-  * environment variable — so a copied session builder or an env-gated
-  * profiler hook fails the suite instead of slipping in. */
+  * place, no main pins a core count, library packages read no
+  * environment variable, and the raw testdata is read only through the
+  * declared schemas — so a copied session builder, an env-gated profiler
+  * hook or a schema-inferring read fails the suite instead of slipping
+  * in. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
@@ -47,5 +49,11 @@ class SourceGuardSpec extends AnyFunSuite {
       rel => libraryDirs.exists(d => rel.startsWith(d + "/")) && rel != "core/Session.scala",
       text => text.contains("sys.env") || text.contains("System.getenv"))
     assert(found.isEmpty, s"environment reads in library code: $found")
+  }
+
+  test("only core/Tables.scala reads the raw testdata parquet") {
+    val found = offenders(_ != "core/Tables.scala",
+      text => text.contains("read.parquet(s\"$sfDir/") || text.contains("read.parquet(s\"$dir/"))
+    assert(found.isEmpty, s"read the raw tables through Tables.read (declared schemas): $found")
   }
 }
